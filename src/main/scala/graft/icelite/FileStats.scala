@@ -4,7 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -451,6 +452,21 @@ object FileStats {
       }
     }
     FileStat(path, rows, bytes, mins, maxs, nulls)
+  }
+
+  /** Stats for a file this process just wrote, from the writer's
+    * in-memory footer instead of a re-open. The footer goes through the
+    * same parquet-format conversion a reader applies (binary min/max over
+    * 4 KiB dropped, NaN / signed-zero double bounds normalized), so the
+    * result equals [[fromFooter(conf, path)]] on the written file.
+    */
+  def fromWrittenFooter(conf: Configuration, footer: ParquetMetadata,
+      path: String): FileStat = {
+    val p = new Path(path)
+    val len = p.getFileSystem(conf).getFileStatus(p).getLen
+    val conv = new ParquetMetadataConverter(conf)
+    fromFooter(conv.fromParquetMetadata(
+      conv.toParquetMetadata(ParquetFileWriter.CURRENT_VERSION, footer)), path, len)
   }
 
   def fromFooter(conf: Configuration, path: String): FileStat = {

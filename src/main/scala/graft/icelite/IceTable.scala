@@ -1,8 +1,13 @@
 package graft.icelite
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{approx_count_distinct, col, count, lit, max, min, struct, when}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
 import org.apache.spark.sql.sources.{And => SAnd, Filter => SFilter, GreaterThanOrEqual => SGte, In => SIn, IsNull => SIsNull, LessThanOrEqual => SLte, Or => SOr}
 import org.apache.spark.sql.types.StructType
 
@@ -1327,91 +1332,85 @@ class IceTable(
     this // unreachable
   }
 
+  /** Evaluate an upsert source ONCE and run `body` over it: an eager local
+    * checkpoint materializes the rows, `body` gets the checkpointed frame
+    * plus the rows backing it, and the rows are released when `body`
+    * returns or throws. Spark 4 carries the source plan's size estimate onto
+    * the checkpoint, so a small source still broadcasts into the merge.
+    * Every later reader (the key screen, the merge, the MOR position scan
+    * and source write) sees the same rows, so a source whose re-evaluation
+    * would differ — a nondeterministic UDF, `dropDuplicates` keeping a
+    * different survivor, input that changes between reads — is screened
+    * and merged consistently.
+    */
+  private def evaluatedOnce[T](df: DataFrame)(
+      body: (DataFrame, RDD[InternalRow]) => T): T = {
+    val src = df.localCheckpoint()
+    val rows = src.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }.get
+    try body(src, rows) finally rows.unpersist(blocking = false)
+  }
+
   /** Candidate screen shared by the COW and MOR upserts: which of `files`
     * could hold a row matching SOME source key tuple (necessary-condition
     * pruning — a file screened out provably contains no match and is
     * carried/skipped; a false positive only costs an unnecessary rewrite
-    * or read). Two layers, both one tiny driver-side source aggregate:
+    * or read). ONE Spark job over the materialized source rows
+    * ([[KeyScreen.summarize]]) feeds two layers:
     *
     * 1. RANGE: per-key [min, max] (+ null presence) of the source against
     *    each file's footer stats / directory values.
     * 2. EXACT KEYS: a range test degrades to "rewrite everything" when
     *    the source keys are scattered (every file's range intersects the
-    *    source's). When the source key set is small — the CDC shape:
+    *    source's). When the source has at most `graft.upsert.keyPeekCap`
+    *    distinct key tuples (default 10k; 0 disables) — the CDC shape:
     *    thousands of keys against a huge table — a per-key IN of the
-    *    DISTINCT source values is ANDed on: min/max proves out-of-range
+    *    distinct source values is ANDed on: min/max proves out-of-range
     *    values absent, the opt-in per-file BLOOM proves scattered values
     *    absent, and a file holding none of the source's keys survives
     *    untouched. Per-key INs AND'd stay a sound necessary condition for
     *    multi-key upserts (a matching row needs every key column to hit
     *    SOME source value under `<=>`; null-extended when the source has
-    *    null keys). Caps keep the peek driver-safe:
-    *    `graft.upsert.keyPeekCap` distinct tuples (default 10k; 0
-    *    disables) and a probe budget so a million-file table never pays
+    *    null keys). The exact tuple count also gates the probe budget
+    *    (`graft.prune.probeBudget`), so a million-file table never pays
     *    keys x files point probes.
     *
-    * DETERMINISM CONTRACT: both layers evaluate `src` in Spark jobs
-    * separate from the join/anti-join that later performs the upsert, so
-    * the screen is sound only for a deterministic source — the same
-    * contract the range layer has always carried implicitly (and MERGE
-    * itself: a source whose key set differs between evaluations has no
-    * well-defined match set). A non-deterministic `src` (rand(), an
-    * uncheckpointed shuffle over changing input) recomputed differently
-    * could surface a key absent from the collected IN set and leave a
-    * matching file untouched. Callers with such a source must
-    * localCheckpoint/persist it first; contrast EqDeleteIo.writeKeyFile,
-    * which closes the same hazard structurally by reading keys back from
-    * the written delete file.
+    * `srcRows` are the rows the merge itself reads (see [[evaluatedOnce]]),
+    * so the screen is sound for any source, deterministic or not: no key
+    * can reach the merge without having passed through this screen. An
+    * empty source matches nothing, so every file is carried.
     */
-  private def keyCandidates(src: DataFrame, keys: Seq[String],
+  private def keyCandidates(srcRows: RDD[InternalRow], keys: Seq[String],
       files: Seq[FileStat], m: TableMeta, tableSchema: StructType)
       : (Seq[FileStat], Seq[FileStat]) = {
     if (files.isEmpty) return (files, Nil)
-    // one driver-side job: per-key min/max + null presence + approx
-    // distinct tuple count (gates the exact-key peek)
-    // single-key sources (the common case) skip the per-row struct
-    // allocation the tuple-NDV estimate would pay
-    val ndvExpr =
-      if (keys.lengthCompare(1) == 0) approx_count_distinct(col(keys.head))
-      else approx_count_distinct(struct(keys.map(col): _*))
-    val aggs = keys.flatMap(k => Seq(
-      min(col(k)).as(s"__min_$k"), max(col(k)).as(s"__max_$k"),
-      count(when(col(k).isNull, lit(1))).as(s"__nulls_$k"))) :+
-      ndvExpr.as("__ndv")
-    val r = src.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val keyNulls = keys.map(k => k -> (r.getAs[Long](s"__nulls_$k") > 0)).toMap
-    val srcNdv = r.getAs[Long]("__ndv")
-    val keyBounds: SFilter = keys.map { k =>
-      val lo = r.getAs[Any](s"__min_$k")
-      val hi = r.getAs[Any](s"__max_$k")
+    val cap = scala.util.Try(
+      spark.conf.get("graft.upsert.keyPeekCap", "10000").toInt).getOrElse(10000)
+    // shared with the DSv2 runtime re-prune (IceLiteScan.budgetRuntime)
+    val probeBudget = scala.util.Try(
+      spark.conf.get("graft.prune.probeBudget", "50000000").toLong)
+      .getOrElse(50L * 1000 * 1000)
+    val s = KeyScreen.summarize(srcRows, tableSchema, keys, math.max(cap, 0))
+    if (s.rows == 0L) return (Nil, files)
+    val types = keys.map(k => tableSchema(k).dataType)
+    val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
+    val keyBounds: SFilter = keys.indices.map { i =>
+      val k = keys(i)
       val range: SFilter =
-        if (lo == null) SIsNull(k) // all-null source key column
-        else SAnd(SGte(k, lo), SLte(k, hi))
-      if (keyNulls(k) && lo != null) SOr(range, SIsNull(k)) else range
+        if (s.mins(i) == null) SIsNull(k) // all-null source key column
+        else SAnd(SGte(k, toScala(i)(s.mins(i))), SLte(k, toScala(i)(s.maxs(i))))
+      if (s.nulls(i) && s.mins(i) != null) SOr(range, SIsNull(k)) else range
     }.reduce(SAnd(_, _): SFilter)
-    val keyIn: Option[SFilter] = {
-      val cap = scala.util.Try(
-        spark.conf.get("graft.upsert.keyPeekCap", "10000").toInt).getOrElse(10000)
-      // shared with the DSv2 runtime re-prune (IceLiteScan.budgetRuntime)
-      val probeBudget = scala.util.Try(
-        spark.conf.get("graft.prune.probeBudget", "50000000").toLong)
-        .getOrElse(50L * 1000 * 1000)
-      if (cap <= 0 || srcNdv > cap ||
-          files.size.toLong * math.max(srcNdv, 1L) > probeBudget) None
-      else {
-        val perKey = keys.map { k =>
-          val vs = src.select(col(k)).where(col(k).isNotNull)
-            .distinct().limit(cap + 1).collect().map(_.get(0))
-          if (vs.length > cap) None // approx NDV undercounted; stay on ranges
-          else Some {
-            val in: SFilter = SIn(k, vs)
-            if (keyNulls(k)) SOr(in, SIsNull(k)) else in
-          }
-        }
-        if (perKey.contains(None)) None
-        else Some(perKey.flatten.reduce(SAnd(_, _): SFilter))
+    val keyIn: Option[SFilter] = Option(s.tuples)
+      .filter(t => files.size.toLong * math.max(t.size, 1) <= probeBudget)
+      .map { tuples =>
+        keys.indices.map { i =>
+          val vs = tuples.asScala.toSeq.collect {
+            case t if !t.isNullAt(i) => toScala(i)(t.get(i, types(i)))
+          }.distinct
+          val in: SFilter = SIn(keys(i), vs.toArray)
+          if (s.nulls(i)) SOr(in, SIsNull(keys(i))) else in
+        }.reduce(SAnd(_, _): SFilter)
       }
-    }
     files.partition { f =>
       // partition values make pruning work when the key IS (or includes)
       // an identity partition column — those carry no file stats.
@@ -1429,21 +1428,22 @@ class IceTable(
     * source's values, unmatched source rows are inserted, unmatched target
     * rows survive. Null-safe key equality.
     *
-    * Physically file-granular copy-on-write: one small aggregation computes
-    * the source's per-key-column [min, max] (+ null presence), the manifest
-    * stats prove which target files cannot contain a matching key — and
-    * when the source key set is small, a per-key IN over manifest blooms
-    * proves even scattered keys absent (see [[keyCandidates]]) — so only
-    * the intersecting files are rewritten (anti-join + union). Every other
-    * file is carried into the new snapshot untouched. Files without stats
-    * are conservatively rewritten.
+    * Physically file-granular copy-on-write. The source is evaluated once
+    * ([[evaluatedOnce]]); one pass over its rows gives per-key-column
+    * [min, max] (+ null presence) and, for a small source, its distinct
+    * key tuples ([[keyCandidates]]). The manifest stats (and per-key INs
+    * over manifest blooms) prove which target files cannot contain a
+    * matching key, so only the intersecting files are rewritten (anti-join
+    * + union against the same rows). Every other file is carried into the
+    * new snapshot untouched. Files without stats are conservatively
+    * rewritten.
     */
   def upsert(df: DataFrame, keys: Seq[String]): IceTable = {
     require(keys.nonEmpty,
       s"upsert into $namespace.$name requires a primary key (config or manifest)")
     val m = meta
     val tableSchema = StructType.fromDDL(m.schemaDdl)
-    val src = conform(df, tableSchema)
+    val conformed = conform(df, tableSchema)
     val current = m.currentSnapshot
     // heal legacy (pre-manifest) entries up front — one parallel footer
     // read per unknown-row file recovers rows + key stats, so the pruning
@@ -1453,24 +1453,25 @@ class IceTable(
       spark.sparkContext.hadoopConfiguration,
       current.map(visibleFiles).getOrElse(Nil))
 
-    val (candidates, untouched) = keyCandidates(src, keys, files, m, tableSchema)
-
-    val currentDirs = current.map(p => FileStats.dataDirsOf(fs, p)).getOrElse(Nil)
-    val curDeletes = current.map(p => FileStats.deletesOf(fs, p)).getOrElse(Nil)
-    val tgt = readFiles(m, tableSchema, candidates, currentDirs, curDeletes)
-    val cond = keys.map(k => tgt(k) <=> src(k)).reduce(_ && _)
-    val merged = tgt.join(src, cond, "left_anti").unionByName(src)
-    val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val (dir, added) = writeData(merged, snapId, m.partitionBy)
-    val untouchedDirs = currentDirs
-      .filter(d => untouched.exists(f => qualify(f.path).startsWith(qualify(d) + "/")))
-    // rewritten candidates had their deletes applied; untouched files keep
-    // theirs. The delete dirs of surviving entries must stay referenced.
-    val carriedDeletes = trimDeletes(curDeletes,
-      untouched.map(f => qualify(f.path)).toSet)
-    val delDirs = carriedDeletes.map(d => new Path(d.path).getParent.toString).distinct
-    commitSnapshot(m, "upsert", untouchedDirs ++ delDirs :+ dir, added,
-      carried = untouched, carriedDeletes = carriedDeletes)
+    evaluatedOnce(conformed) { (src, srcRows) =>
+      val (candidates, untouched) = keyCandidates(srcRows, keys, files, m, tableSchema)
+      val currentDirs = current.map(p => FileStats.dataDirsOf(fs, p)).getOrElse(Nil)
+      val curDeletes = current.map(p => FileStats.deletesOf(fs, p)).getOrElse(Nil)
+      val tgt = readFiles(m, tableSchema, candidates, currentDirs, curDeletes)
+      val cond = keys.map(k => tgt(k) <=> src(k)).reduce(_ && _)
+      val merged = tgt.join(src, cond, "left_anti").unionByName(src)
+      val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
+      val (dir, added) = writeData(merged, snapId, m.partitionBy)
+      val untouchedDirs = currentDirs
+        .filter(d => untouched.exists(f => qualify(f.path).startsWith(qualify(d) + "/")))
+      // rewritten candidates had their deletes applied; untouched files keep
+      // theirs. The delete dirs of surviving entries must stay referenced.
+      val carriedDeletes = trimDeletes(curDeletes,
+        untouched.map(f => qualify(f.path)).toSet)
+      val delDirs = carriedDeletes.map(d => new Path(d.path).getParent.toString).distinct
+      commitSnapshot(m, "upsert", untouchedDirs ++ delDirs :+ dir, added,
+        carried = untouched, carriedDeletes = carriedDeletes)
+    }
   }
 
   /** Merge-on-read row-level DELETE (Iceberg v2 position deletes): instead
@@ -1671,18 +1672,21 @@ class IceTable(
     * the new delete file and the new data files. A 100-row upsert against
     * a million-file table writes ~1 data file + 1 tiny delete file where
     * copy-on-write rewrites every intersecting file; the read tax is the
-    * MOR position filter until [[compact]] folds it away. Falls back to
-    * copy-on-write on rename history / legacy manifests.
+    * MOR position filter until [[compact]] folds it away. The source is
+    * evaluated once ([[evaluatedOnce]]): the key screen, the position
+    * scan's key set and the appended data all read the same rows, so the
+    * deleted positions always belong to keys that were appended. Falls back
+    * to copy-on-write on rename history / legacy manifests.
     */
   def upsertMor(df: DataFrame, keys: Seq[String]): IceTable = {
     require(keys.nonEmpty,
       s"upsert into $namespace.$name requires a primary key (config or manifest)")
     val m = meta
     val tableSchema = StructType.fromDDL(m.schemaDdl)
-    val src = conform(df, tableSchema)
+    val conformed = conform(df, tableSchema)
     val current = m.currentSnapshot match {
       case Some(c) => c
-      case None => return append(src) // empty table: plain insert
+      case None => return append(conformed) // empty table: plain insert
     }
     val files = visibleFiles(current)
     if (m.renames.nonEmpty || files.exists(_.rows < 0))
@@ -1694,61 +1698,64 @@ class IceTable(
     if (keys.exists(idCols.contains))
       return upsert(df, keys)
 
-    // candidate files by source key containment — the same shared screen
-    // as the COW upsert (range + exact-key/bloom refinement): fewer
-    // candidates means a smaller position-scan read below
-    val (candidates, _) = keyCandidates(src, keys, files, m, tableSchema)
+    evaluatedOnce(conformed) { (src, srcRows) =>
+      // candidate files by source key containment — the same shared screen
+      // as the COW upsert (range + exact-key/bloom refinement): fewer
+      // candidates means a smaller position-scan read below
+      val (candidates, _) = keyCandidates(srcRows, keys, files, m, tableSchema)
 
-    // positions of matched target rows: semi-join candidate rows (read with
-    // absolute row positions) against the distinct source keys (broadcast —
-    // upsert sources are small relative to the table by definition)
-    val prior = FileStats.deletesOf(fs, current)
-    val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val (perFile, delDirOpt): (Array[(String, Long)], Option[String]) =
-      if (candidates.isEmpty) (Array.empty, None)
-      else {
-        val sk = src.select(keys.map(k => col(k).as(s"__k_$k")): _*).distinct()
-        val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-        val matches0 = minusEqDeleted(
-          spark.read.schema(tableSchema)
-            .parquet(candidates.map(_.path): _*)
-            .join(org.apache.spark.sql.functions.broadcast(sk), cond, "left_semi")
-            .withColumn("__mfp", col("_metadata.file_path"))
-            .withColumn("__mpos", col("_metadata.row_index")),
-          prior, candidates)
-          .select(col("__mfp").as("file_path"), col("__mpos").as("pos"))
-        val candSet = candidates.map(f => qualify(f.path)).toSet
-        val priorApplicable = prior.filter(_.dataFiles.exists(candSet))
-        val matches =
-          if (priorApplicable.isEmpty) matches0
-          else matches0.join(
-            spark.read.parquet(priorApplicable.map(_.path): _*)
-              .select(col("file_path"), col("pos")),
-            Seq("file_path", "pos"), "left_anti")
-        val collected = matches.groupBy("file_path").agg(count(lit(1)).as("n"))
-          .collect().map(r => (qualify(r.getString(0)), r.getLong(1))).sortBy(_._1)
-        if (collected.isEmpty) (collected, None)
+      // positions of matched target rows: semi-join candidate rows (read
+      // with absolute row positions) against the distinct source keys
+      // (broadcast — upsert sources are small relative to the table by
+      // definition)
+      val prior = FileStats.deletesOf(fs, current)
+      val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
+      val (perFile, delDirOpt): (Array[(String, Long)], Option[String]) =
+        if (candidates.isEmpty) (Array.empty, None)
         else {
-          val delDir = new Path(tableDir,
-            f"data/deletes-snap-$snapId%05d-${java.util.UUID.randomUUID().toString.take(8)}")
-          matches.repartition(1).sortWithinPartitions("file_path", "pos")
-            .write.mode("errorifexists").parquet(delDir.toString)
-          (collected, Some(delDir.toString))
+          val sk = src.select(keys.map(k => col(k).as(s"__k_$k")): _*).distinct()
+          val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
+          val matches0 = minusEqDeleted(
+            spark.read.schema(tableSchema)
+              .parquet(candidates.map(_.path): _*)
+              .join(org.apache.spark.sql.functions.broadcast(sk), cond, "left_semi")
+              .withColumn("__mfp", col("_metadata.file_path"))
+              .withColumn("__mpos", col("_metadata.row_index")),
+            prior, candidates)
+            .select(col("__mfp").as("file_path"), col("__mpos").as("pos"))
+          val candSet = candidates.map(f => qualify(f.path)).toSet
+          val priorApplicable = prior.filter(_.dataFiles.exists(candSet))
+          val matches =
+            if (priorApplicable.isEmpty) matches0
+            else matches0.join(
+              spark.read.parquet(priorApplicable.map(_.path): _*)
+                .select(col("file_path"), col("pos")),
+              Seq("file_path", "pos"), "left_anti")
+          val collected = matches.groupBy("file_path").agg(count(lit(1)).as("n"))
+            .collect().map(r => (qualify(r.getString(0)), r.getLong(1))).sortBy(_._1)
+          if (collected.isEmpty) (collected, None)
+          else {
+            val delDir = new Path(tableDir,
+              f"data/deletes-snap-$snapId%05d-${java.util.UUID.randomUUID().toString.take(8)}")
+            matches.repartition(1).sortWithinPartitions("file_path", "pos")
+              .write.mode("errorifexists").parquet(delDir.toString)
+            (collected, Some(delDir.toString))
+          }
         }
-      }
 
-    // write the source into a writer-unique dir (like append): a lost
-    // commit race re-attaches the same files on retry
-    val (dir, added) = writeData(src, snapId, m.partitionBy, uniqueDir = true)
-    val newStat: DeleteStat = delDirOpt.map { dd =>
-      val it = fs.listFiles(new Path(dd), true)
-      val delFiles = Iterator.continually(it).takeWhile(_.hasNext)
-        .map(_.next().getPath).filter(_.getName.endsWith(".parquet"))
-        .map(_.toString).toSeq.sorted
-      DeleteStat(delFiles.head,
-        perFile.map { case (p, n) => DeleteFileEntry(p, n) }.toSeq)
-    }.getOrElse(DeleteStat("", Nil))
-    commitMorDelta(m, newStat, added, Some(dir), delDirOpt, "upsert")
+      // write the source into a writer-unique dir (like append): a lost
+      // commit race re-attaches the same files on retry
+      val (dir, added) = writeData(src, snapId, m.partitionBy, uniqueDir = true)
+      val newStat: DeleteStat = delDirOpt.map { dd =>
+        val it = fs.listFiles(new Path(dd), true)
+        val delFiles = Iterator.continually(it).takeWhile(_.hasNext)
+          .map(_.next().getPath).filter(_.getName.endsWith(".parquet"))
+          .map(_.toString).toSeq.sorted
+        DeleteStat(delFiles.head,
+          perFile.map { case (p, n) => DeleteFileEntry(p, n) }.toSeq)
+      }.getOrElse(DeleteStat("", Nil))
+      commitMorDelta(m, newStat, added, Some(dir), delDirOpt, "upsert")
+    }
   }
 
   /** Key type gate for the equality-delete ops (see [[EqDeleteIo.keyType]]). */

@@ -949,9 +949,9 @@ private[v2] class IceLiteDataWriter(
   private def closeWriter(key: String): Unit =
     open.remove(key).foreach { case (w, file) =>
       w.close()
-      // stats from this task's own freshly-written footer, executor-side —
-      // the driver never re-opens data files
-      val base = FileStats.fromFooter(conf.value, file)
+      // stats from this task's own in-memory footer, executor-side — no
+      // one re-opens the file just written
+      val base = FileStats.fromWrittenFooter(conf.value, w.getFooter, file)
       val withSums = sumAcc.remove(key) match {
         case Some((acc, bad)) => base.copy(sums = sumNames.indices.collect {
           case j if !bad(j) => sumNames(j) -> (if (sumScale(j) == 0)

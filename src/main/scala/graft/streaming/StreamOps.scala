@@ -713,6 +713,27 @@ object StreamOps {
              |SELECT * FROM m UNION ALL SELECT * FROM um
              |ORDER BY click_id, view_id""".stripMargin),
       (s, dir) => {
+        // the guard mirrors the stream's real final watermark: min over the
+        // two watermarked inputs' maxima (see the QDef comment), minus the
+        // 1h delay and the 30min interval plus 1min slack. Both maxima must
+        // exist: least() skips a NULL, so a stream with no clicks or no
+        // views would silently take the other side's maximum and
+        // reintroduce the overshoot the guard exists to prevent.
+        val guard = QUtil.t(s, dir, "events")
+          .agg(max(when(col("event_type") === "click", col("ts"))).as("click_max"),
+            max(when(col("event_type") === "view", col("ts"))).as("view_max"))
+          .select(col("click_max"), col("view_max"),
+            (least(col("click_max"), col("view_max"))
+              - expr("interval 91 minutes")).as("cutoff"))
+          .collect()(0)
+        val missing = Seq("click", "view").zipWithIndex
+          .collect { case (kind, i) if guard.isNullAt(i) => kind }
+        if (missing.nonEmpty)
+          throw new IllegalStateException(
+            "st9b_stream_outer_interval_join: watermark guard undefined — the " +
+              s"events hold no ${missing.mkString(" or ")} rows, so the " +
+              "two-input watermark has no minimum to bound unmatched clicks")
+        val cutoff = guard.getTimestamp(2)
         val src = eventStream(s, dir)
         val clicks = src
           .filter(col("event_type") === "click")
@@ -733,15 +754,6 @@ object StreamOps {
             col("click_ts"))
         val out = runToTable(joined, OutputMode.Append(),
           s"st9b_sink_${System.nanoTime()}")
-        // the guard mirrors the stream's real final watermark: min over the
-        // two watermarked inputs' maxima (see the QDef comment), minus the
-        // 1h delay and the 30min interval plus 1min slack
-        val cutoff = QUtil.t(s, dir, "events")
-          .agg((least(
-            max(when(col("event_type") === "click", col("ts"))),
-            max(when(col("event_type") === "view", col("ts"))))
-            - expr("interval 91 minutes")).as("c"))
-          .collect()(0).getTimestamp(0)
         out.filter(col("view_id").isNotNull || col("click_ts") <= lit(cutoff))
           .select("click_id", "view_id", "user_id")
           .orderBy("click_id", "view_id")

@@ -87,4 +87,20 @@ class StreamOuterJoinSpec extends SparkSpec {
     spark.streams.resetTerminated()
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
   }
+
+  test("a click-only event stream fails with the named guard error") {
+    val events = graft.queries.QUtil.t(spark, sfDir, "events")
+    val dir = scratch("st9b-click-only")
+    val staged = s"$dir/staged"
+    events.filter(col("event_type") === "click").coalesce(1).write.parquet(staged)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(new org.apache.hadoop.fs.Path(staged))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+    fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+    fs.delete(new org.apache.hadoop.fs.Path(staged), true)
+    val err = intercept[IllegalStateException](
+      SparkEntry.queries("st9b_stream_outer_interval_join")(spark, dir))
+    assert(err.getMessage.contains("watermark guard undefined"), err.getMessage)
+    assert(err.getMessage.contains("no view rows"), err.getMessage)
+  }
 }
