@@ -463,7 +463,7 @@ object FileStats {
   def fromWrittenFooter(conf: Configuration, footer: ParquetMetadata,
       path: String): FileStat = {
     val p = new Path(path)
-    val len = p.getFileSystem(conf).getFileStatus(p).getLen
+    val len = IceFs.of(p, conf).getFileStatus(p).getLen
     val conv = new ParquetMetadataConverter(conf)
     fromFooter(conv.fromParquetMetadata(
       conv.toParquetMetadata(ParquetFileWriter.CURRENT_VERSION, footer)), path, len)
@@ -471,7 +471,7 @@ object FileStats {
 
   def fromFooter(conf: Configuration, path: String): FileStat = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
+    val fs = IceFs.of(p, conf)
     val len = fs.getFileStatus(p).getLen
     val in = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
     try fromFooter(in.getFooter, path, len)
@@ -486,7 +486,7 @@ object FileStats {
   private def fromFooterWithMessage(conf: Configuration, path: String)
       : (FileStat, String) = {
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
+    val fs = IceFs.of(p, conf)
     val len = fs.getFileStatus(p).getLen
     val in = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
     try {

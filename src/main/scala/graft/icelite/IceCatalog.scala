@@ -13,13 +13,15 @@ import org.apache.spark.sql.types.StructType
   * (`wr:112-128`), listings for the sync actions (`ex:138-162`).
   *
   * Uses the Hadoop FileSystem API throughout, so the same code runs against
-  * local disk, HDFS, or an object store — the warehouse URI decides.
+  * local disk, HDFS, or an object store — the warehouse URI decides. Every
+  * FileSystem comes from [[IceFs]], which keeps local-disk writes from
+  * forking `chmod`.
   */
 class IceCatalog(spark: SparkSession, val warehouse: String) {
 
   private val root = new Path(warehouse)
   private[icelite] def fs: FileSystem =
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    IceFs.of(root, spark.sparkContext.hadoopConfiguration)
 
   def tablePath(ns: String, table: String): Path = new Path(new Path(root, ns), table)
 

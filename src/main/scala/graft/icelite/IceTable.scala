@@ -145,7 +145,7 @@ class IceTable(
         spark.createDataset(Seq(s.manifestFile)).mapPartitions { it =>
           it.flatMap { p =>
             val hp = new Path(p)
-            MetaIo.readManifestDoc(hp.getFileSystem(conf.value), p)
+            MetaIo.readManifestDoc(IceFs.of(hp, conf.value), p)
               .files.iterator.map(f => (f.path, f.rows, f.bytes))
           }
         }.toDF("path", "rows", "bytes")
@@ -304,10 +304,13 @@ class IceTable(
   /** Write df into a fresh snapshot directory; returns (dir, file manifest).
     * The footer scan that builds the manifest is one read per written file,
     * at commit time — the same economics as an Iceberg manifest write.
+    * `m` is the metadata the caller planned on and will commit against: its
+    * partition spec, sort order and properties shape the files.
     */
-  private def writeData(df: DataFrame, snapId: Long, partitionBy: Seq[String],
+  private def writeData(m: TableMeta, df: DataFrame, snapId: Long,
       sortWithin: Seq[String] = Nil, uniqueDir: Boolean = false)
       : (String, Seq[FileStat]) = {
+    val partitionBy = m.partitionBy
     // `uniqueDir` (appends): a random suffix keeps concurrent writers out of
     // each other's directories, so losing a metadata commit race is
     // retryable without touching data. The snap id in the name is the
@@ -346,7 +349,7 @@ class IceTable(
     // A replace() whose new schema drops a sort column writes unsorted and
     // clears the declaration in the same commit (see replace).
     val declared = {
-      val so = meta.sortOrder
+      val so = m.sortOrder
       if (so.nonEmpty && so.forall(df.columns.contains)) so else Nil
     }
     val inFileOrder = (sortWithin ++ declared).distinct
@@ -379,7 +382,7 @@ class IceTable(
         if (fields.isEmpty) clustered
         else clustered.select(df.columns.map(col).toIndexedSeq: _*)
       fs.mkdirs(dataDir) // zero-row writes must still leave the snap dir
-      val props = meta.properties
+      val props = m.properties
       val stats = graft.sources.v2.IceLiteRowWrite.write(tableShaped,
         fs.makeQualified(dataDir).toString, partitionBy, Ndv.gateConf(spark),
         graft.sources.v2.IceLiteDataWriter.bloomColsConf(props),
@@ -478,7 +481,7 @@ class IceTable(
     val conformed = conform(df, StructType.fromDDL(m0.schemaDdl))
     val snapId = m0.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val (dir, added) =
-      writeData(conformed, snapId, m0.partitionBy, uniqueDir = true)
+      writeData(m0, conformed, snapId, uniqueDir = true)
     var attempts = 0
     while (true) {
       val m = meta
@@ -526,7 +529,7 @@ class IceTable(
   def replace(df: DataFrame): IceTable = {
     val m = meta
     val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val (dir, added) = writeData(df, snapId, m.partitionBy)
+    val (dir, added) = writeData(m, df, snapId)
     // a replace whose schema drops a sort column cannot maintain the
     // declared order: writeData already wrote unsorted, so clear the
     // declaration in the same commit (older sorted snapshots pin their own
@@ -609,7 +612,7 @@ class IceTable(
       // (footer) skipping get tight bounds
       else toDF.repartitionByRange(targetFiles, effSort.map(col): _*)
         .sortWithinPartitions(effSort.map(col): _*)
-    val (dir, added) = writeData(df, snapId, m.partitionBy, effSort)
+    val (dir, added) = writeData(m, df, snapId, effSort)
     // with outstanding EQUALITY deletes the pre-compact total is an upper
     // bound (matched-row counts are unknown until this very read applies
     // them), so exact drift is only checkable without eq debt — after this
@@ -700,7 +703,7 @@ class IceTable(
     // partitioned tables: the write funnel re-clusters by partition dirs
     // (one file per affected partition); unpartitioned: explicit targetFiles
     val df = if (m.partitionBy.isEmpty) df0.repartition(targetFiles) else df0
-    val (dir, added) = writeData(df, snapId, m.partitionBy)
+    val (dir, added) = writeData(m, df, snapId)
     if (small.forall(_.rows >= 0))
       require(added.map(_.rows).sum == small.map(_.rows).sum,
         s"binpack row-count drift: ${added.map(_.rows).sum} != ${small.map(_.rows).sum}")
@@ -798,7 +801,7 @@ class IceTable(
     val currentDirs = FileStats.dataDirsOf(fs, current)
     val src = readFiles(m, tableSchema, cands, currentDirs, dels)
     val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-    val (dir, added) = writeData(src, snapId, m.partitionBy)
+    val (dir, added) = writeData(m, src, snapId)
     val untouchedDirs = currentDirs
       .filter(d => untouched.exists(f => qualify(f.path).startsWith(qualify(d) + "/")))
     commitSnapshot(m, "compact", untouchedDirs :+ dir, added,
@@ -882,7 +885,7 @@ class IceTable(
     val conformed = conform(df, schemaAtRef)
     val snapId0 = m0.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val (dir, added) =
-      writeData(conformed, snapId0, m0.partitionBy, uniqueDir = true)
+      writeData(m0, conformed, snapId0, uniqueDir = true)
     // Optimistic commit retry, same protocol as append: WAP staging is
     // exactly the multi-writer scenario, so a lost version race re-resolves
     // the ref head (the branch may have grown under us) and re-attaches the
@@ -969,7 +972,7 @@ class IceTable(
     val conformed = conform(df, StructType.fromDDL(m0.schemaDdl))
     val snapId0 = m0.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
     val (dir, added) =
-      writeData(conformed, snapId0, m0.partitionBy, uniqueDir = true)
+      writeData(m0, conformed, snapId0, uniqueDir = true)
     var attempts = 0
     while (true) {
       val m = meta
@@ -1461,7 +1464,7 @@ class IceTable(
       val cond = keys.map(k => tgt(k) <=> src(k)).reduce(_ && _)
       val merged = tgt.join(src, cond, "left_anti").unionByName(src)
       val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-      val (dir, added) = writeData(merged, snapId, m.partitionBy)
+      val (dir, added) = writeData(m, merged, snapId)
       val untouchedDirs = currentDirs
         .filter(d => untouched.exists(f => qualify(f.path).startsWith(qualify(d) + "/")))
       // rewritten candidates had their deletes applied; untouched files keep
@@ -1545,17 +1548,23 @@ class IceTable(
       f"data/deletes-snap-$snapId%05d-${java.util.UUID.randomUUID().toString.take(8)}")
     // one sorted delete file: MOR is for SELECTIVE deletes by design, and
     // sorted (file_path, pos) keeps the reader's position probe sequential
-    matches.repartition(1).sortWithinPartitions("file_path", "pos")
-      .write.mode("errorifexists").parquet(delDir.toString)
-    val it = fs.listFiles(delDir, true)
-    val delFiles = Iterator.continually(it).takeWhile(_.hasNext)
-      .map(_.next().getPath).filter(_.getName.endsWith(".parquet"))
-      .map(_.toString).toSeq.sorted
-    require(delFiles.nonEmpty, "position-delete write produced no file")
-    val stat = DeleteStat(delFiles.head,
+    val stat = DeleteStat(writePositionDeletes(matches, delDir),
       perFile.map { case (p, n) => DeleteFileEntry(p, n) }.toSeq)
     commitMorDelta(m, stat, added = Nil, newDataDir = None,
       delDir = Some(delDir.toString), operation = "delete")
+  }
+
+  /** Write `(file_path, pos)` rows as one sorted position-delete file under
+    * `delDir` through the row-loop writer, so it opens through [[IceFs]];
+    * returns the written file's path.
+    */
+  private def writePositionDeletes(matches: DataFrame, delDir: Path): String = {
+    fs.mkdirs(delDir)
+    val written = graft.sources.v2.IceLiteRowWrite.write(
+      matches.repartition(1).sortWithinPartitions("file_path", "pos"),
+      fs.makeQualified(delDir).toString, partitionBy = Nil, ndvCols = "")
+    require(written.nonEmpty, "position-delete write produced no file")
+    written.head.path
   }
 
   /** Filter out rows already claimed by outstanding EQUALITY deletes from
@@ -1710,7 +1719,8 @@ class IceTable(
       // definition)
       val prior = FileStats.deletesOf(fs, current)
       val snapId = m.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-      val (perFile, delDirOpt): (Array[(String, Long)], Option[String]) =
+      // the delete file's (dir, path) when any target row matched
+      val (perFile, del): (Array[(String, Long)], Option[(String, String)]) =
         if (candidates.isEmpty) (Array.empty, None)
         else {
           val sk = src.select(keys.map(k => col(k).as(s"__k_$k")): _*).distinct()
@@ -1737,24 +1747,18 @@ class IceTable(
           else {
             val delDir = new Path(tableDir,
               f"data/deletes-snap-$snapId%05d-${java.util.UUID.randomUUID().toString.take(8)}")
-            matches.repartition(1).sortWithinPartitions("file_path", "pos")
-              .write.mode("errorifexists").parquet(delDir.toString)
-            (collected, Some(delDir.toString))
+            (collected, Some(delDir.toString -> writePositionDeletes(matches, delDir)))
           }
         }
 
       // write the source into a writer-unique dir (like append): a lost
       // commit race re-attaches the same files on retry
-      val (dir, added) = writeData(src, snapId, m.partitionBy, uniqueDir = true)
-      val newStat: DeleteStat = delDirOpt.map { dd =>
-        val it = fs.listFiles(new Path(dd), true)
-        val delFiles = Iterator.continually(it).takeWhile(_.hasNext)
-          .map(_.next().getPath).filter(_.getName.endsWith(".parquet"))
-          .map(_.toString).toSeq.sorted
-        DeleteStat(delFiles.head,
+      val (dir, added) = writeData(m, src, snapId, uniqueDir = true)
+      val newStat: DeleteStat = del.map { case (_, delFile) =>
+        DeleteStat(delFile,
           perFile.map { case (p, n) => DeleteFileEntry(p, n) }.toSeq)
       }.getOrElse(DeleteStat("", Nil))
-      commitMorDelta(m, newStat, added, Some(dir), delDirOpt, "upsert")
+      commitMorDelta(m, newStat, added, Some(dir), del.map(_._1), "upsert")
     }
   }
 
@@ -1857,7 +1861,7 @@ class IceTable(
     val (dataDir, added): (Option[String], Seq[FileStat]) =
       if (!appendData) (None, Nil)
       else {
-        val (d, a) = writeData(src, snapId0, m0.partitionBy, uniqueDir = true)
+        val (d, a) = writeData(m0, src, snapId0, uniqueDir = true)
         (Some(d), a)
       }
     val addedRows = added.map(_.rows).sum
@@ -2122,7 +2126,7 @@ class IceTable(
         // keep rows where the condition is false or NULL
         val kept = src.filter(!org.apache.spark.sql.functions.coalesce(
           cond, org.apache.spark.sql.functions.lit(false)))
-        val (dir, a) = writeData(kept, snapId, m.partitionBy)
+        val (dir, a) = writeData(m, kept, snapId)
         (Seq(dir), a)
       }
     val untouchedDirs = currentDirs
@@ -2264,7 +2268,7 @@ class IceTable(
         "(CALL system.set_sort_order(table, array()))")
     val conf = spark.sparkContext.hadoopConfiguration
     val srcPath = new Path(source)
-    val sfs = srcPath.getFileSystem(conf)
+    val sfs = IceFs.of(srcPath, conf)
     require(sfs.exists(srcPath), s"add_files source not found: $source")
     val paths: Seq[String] =
       if (sfs.getFileStatus(srcPath).isFile)

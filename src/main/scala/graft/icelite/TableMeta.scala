@@ -591,12 +591,18 @@ object MetaIo {
   def read(fs: FileSystem, tableDir: Path): TableMeta = {
     // the hint is swapped via rename (atomic on POSIX/HDFS), so a reader
     // sees the old or the new pointer, never a partial one; the retry below
-    // only defends against non-atomic filesystems truncating in place
+    // defends against non-atomic filesystems truncating in place, and
+    // against a checksummed local FS, which renames the hint and its `.crc`
+    // sidecar one after the other: between the two, the new pointer reads
+    // against the old checksum
     var attempt = 0
     while (true) {
       val raw =
         try Some(readFile(fs, hintFile(tableDir)).trim)
-        catch { case _: java.io.FileNotFoundException => None } // mid-swap
+        catch { // mid-swap
+          case _: java.io.FileNotFoundException |
+               _: org.apache.hadoop.fs.ChecksumException => None
+        }
       raw.flatMap(_.toIntOption) match {
         case Some(v) => return rollForward(fs, tableDir, v)
         case None if attempt < 20 => attempt += 1; Thread.sleep(5)

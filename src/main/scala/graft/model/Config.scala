@@ -2,6 +2,7 @@ package graft.model
 
 import com.fasterxml.jackson.annotation.JsonProperty
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** The component configuration contract (`config.json` in the `/data` dir),
@@ -31,7 +32,11 @@ final case class DataSelection(
     mode: String = "all_data", // all_data | selected_columns | custom_query
     columns: Seq[String] = Nil,
     query: String = "",
-    @JsonProperty("snapshot_id") snapshotId: Option[Long] = None)
+    // erasure hides the Long from Jackson, which would box a small id as an
+    // Integer and fail later with a ClassCastException
+    @JsonProperty("snapshot_id")
+    @JsonDeserialize(contentAs = classOf[java.lang.Long])
+    snapshotId: Option[Long] = None)
 
 /** Extractor output config (`ex/src/configuration.py:23-25,44-50`). */
 final case class ExDestination(

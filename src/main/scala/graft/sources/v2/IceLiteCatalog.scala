@@ -215,7 +215,7 @@ class IceLiteCatalog extends TableCatalog with SupportsNamespaces
           s"got ${unsupported.mkString(", ")} — evolve via replace()")
     val (ns, tbl) = (nsOf(ident), ident.name())
     val dir = cat.tablePath(ns, tbl)
-    val fs = dir.getFileSystem(
+    val fs = graft.icelite.IceFs.of(dir,
       org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
     val meta = graft.icelite.MetaIo.read(fs, dir)
     var schema = StructType.fromDDL(meta.schemaDdl)
@@ -425,7 +425,7 @@ class IceLiteCatalog extends TableCatalog with SupportsNamespaces
         throw new IllegalStateException(
           s"namespace ${namespace(0)} is not empty (use CASCADE)")
       val p = new org.apache.hadoop.fs.Path(warehouse, namespace(0))
-      p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+      graft.icelite.IceFs.of(p, SparkSession.active.sparkContext.hadoopConfiguration)
         .delete(p, true)
     }
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.icelite.{IceCatalog, IceTable}
+import graft.icelite.{IceCatalog, IceFs, IceTable}
 
 /** SQL maintenance surface: `CALL <catalog>.system.<proc>(...)` for the
   * table-lifecycle operations that were API-only — the icelite analog of
@@ -54,7 +54,7 @@ object IceLiteProcedures {
   private[v2] def hivePartitionColsOf(spark: SparkSession, source: String,
       schema: StructType): Seq[String] = {
     val srcPath = new org.apache.hadoop.fs.Path(source)
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = IceFs.of(srcPath, spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(srcPath) || fs.getFileStatus(srcPath).isFile) return Nil
     val it = fs.listFiles(srcPath, true)
     val first = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())

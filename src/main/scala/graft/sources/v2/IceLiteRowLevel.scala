@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.icelite.{DeleteFileEntry, DeleteStat, FileStat, FileStats, MetaIo, SnapshotMeta}
+import graft.icelite.{DeleteFileEntry, DeleteStat, FileStat, FileStats, IceFs, MetaIo, SnapshotMeta}
 
 /** What a row-level operation's scan reports back to its operation: the
   * files it planned. Group-based ops replace exactly those files at commit;
@@ -113,7 +113,7 @@ private[v2] class IceLiteReplaceGroupsWriteBuilder(
     // single UPDATE would silently break the reported ordering
     val dir = new Path(new Path(warehouse, ns), tbl)
     val sortOrder = MetaIo.read(
-      dir.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration),
+      IceFs.of(dir, SparkSession.active.sparkContext.hadoopConfiguration),
       dir).sortOrder
     IceLiteWriteShape.of(partitionBy,
       new IceLiteReplaceGroupsBatchWrite(warehouse, ns, tbl, partitionBy, schema, op),
@@ -131,7 +131,7 @@ private[v2] class IceLiteReplaceGroupsBatchWrite(
   private val stagingName = s".staging-${UUID.randomUUID()}"
   private def tableDir = new Path(new Path(warehouse, ns), tbl)
   private def hadoopConf = SparkSession.active.sparkContext.hadoopConfiguration
-  private def fs = tableDir.getFileSystem(hadoopConf)
+  private def fs = IceFs.of(tableDir, hadoopConf)
   // metadata baseline as of write build: the schema-race guard's anchor
   // (same contract as IceLiteDeltaBatchWrite)
   private val m0 = MetaIo.read(fs, tableDir)
@@ -372,7 +372,7 @@ private[v2] class IceLiteDeltaBatchWrite(
   private val stagingId = UUID.randomUUID().toString
   private def tableDir = new Path(new Path(warehouse, ns), tbl)
   private def hadoopConf = SparkSession.active.sparkContext.hadoopConfiguration
-  private def fs = tableDir.getFileSystem(hadoopConf)
+  private def fs = IceFs.of(tableDir, hadoopConf)
   private def qualify(p: String): String =
     fs.makeQualified(new Path(p)).toString
   // metadata baseline as of write build: the schema-race guard's anchor
@@ -537,7 +537,8 @@ private[v2] class IceLiteDeltaWriter(
   private def delW: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = {
     if (delWriter == null) {
       delFile = f"$delStaging/del-$partitionId%05d-$taskId.parquet"
-      delWriter = new InternalRowWriterBuilder(new Path(delFile),
+      delWriter = new InternalRowWriterBuilder(
+        IceFs.outputFile(new Path(delFile), conf.value),
         new InternalRowWriteSupport(
           StructType.fromDDL("file_path STRING, pos BIGINT"), delType, lead = 0))
         .withConf(conf.value).build()
@@ -578,7 +579,7 @@ private[v2] class IceLiteDeltaWriter(
       try delWriter.close() catch { case _: Exception => () }
       try {
         val p = new Path(delFile)
-        val pfs = p.getFileSystem(conf.value)
+        val pfs = IceFs.of(p, conf.value)
         if (pfs.exists(p)) pfs.delete(p, false)
       } catch { case _: Exception => () }
     }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.icelite.{FilePrune, FileStat, FileStats, MetaIo, PartValues}
+import graft.icelite.{FilePrune, FileStat, FileStats, IceFs, MetaIo, PartValues}
 
 /** DataSource V2 surface for IceLite tables: `spark.read.format("icelite")
   * .option("warehouse", wh).option("table", "ns.tbl").load()`, with optional
@@ -130,7 +130,7 @@ private[v2] object IceLiteV2 {
       : (graft.icelite.TableMeta, org.apache.hadoop.fs.FileSystem) = {
     val dir = new Path(new Path(warehouse, ns), tbl)
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val fs = dir.getFileSystem(conf)
+    val fs = IceFs.of(dir, conf)
     if (!MetaIo.exists(fs, dir))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(ns, tbl))
@@ -1579,7 +1579,7 @@ private[v2] class IceLitePartitionsTable(
           override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
             val mp = p.asInstanceOf[IceLiteManifestPartition]
             val path = new Path(mp.manifestPath)
-            val pfs = path.getFileSystem(conf.value)
+            val pfs = IceFs.of(path, conf.value)
             val it = IceLitePartitions
               .rows(MetaIo.readManifestDoc(pfs, mp.manifestPath).files).iterator
             new PartitionReader[InternalRow] {
@@ -1647,7 +1647,7 @@ private[v2] class IceLiteAllFilesTable(
           override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
             val mp = p.asInstanceOf[IceLiteSnapManifestPartition]
             val path = new Path(mp.manifestPath)
-            val pfs = path.getFileSystem(conf.value)
+            val pfs = IceFs.of(path, conf.value)
             val doc = MetaIo.readManifestDoc(pfs, mp.manifestPath)
             val it = IceLiteAllFiles
               .rows(mp.snapshotId, doc.addedPaths, doc.files).iterator
@@ -1711,7 +1711,7 @@ private[v2] class IceLiteAllEntriesTable(
           override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
             val mp = p.asInstanceOf[IceLiteSnapManifestPartition]
             val path = new Path(mp.manifestPath)
-            val pfs = path.getFileSystem(conf.value)
+            val pfs = IceFs.of(path, conf.value)
             val doc = MetaIo.readManifestDoc(pfs, mp.manifestPath)
             val added = doc.addedPaths
               .map(graft.icelite.FileStats.normPath).toSet
@@ -1794,7 +1794,7 @@ private[v2] class IceLiteManifestReaderFactory(conf: SerializableConfiguration)
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val mp = p.asInstanceOf[IceLiteManifestPartition]
     val path = new Path(mp.manifestPath)
-    val pfs = path.getFileSystem(conf.value)
+    val pfs = IceFs.of(path, conf.value)
     val it = MetaIo.readManifestDoc(pfs, mp.manifestPath).files.iterator
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
@@ -2839,7 +2839,7 @@ private[v2] class IceLiteColumnarReader(
     // A zero/unknown length (legacy manifest entries) must not become an
     // empty split — stat the file instead.
     val p = new Path(file)
-    val len = if (length > 0) length else p.getFileSystem(c).getFileStatus(p).getLen
+    val len = if (length > 0) length else IceFs.of(p, c).getFileStatus(p).getLen
     val split = new org.apache.hadoop.mapred.FileSplit(p, 0, len, Array.empty[String])
     r.initialize(split, new TaskAttemptContextImpl(c, new TaskAttemptID()))
     r.initBatch(partSchema, PartValues.internalRow(partSchema, rawPartValues))
@@ -2980,7 +2980,7 @@ private[v2] class IceLiteRowReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC",
       /* useOffHeap = */ false, /* capacity = */ 4096)
     val p = new Path(file)
-    val len = if (length > 0) length else p.getFileSystem(c).getFileStatus(p).getLen
+    val len = if (length > 0) length else IceFs.of(p, c).getFileStatus(p).getLen
     val split = new org.apache.hadoop.mapred.FileSplit(p, 0, len, Array.empty[String])
     r.initialize(split, new TaskAttemptContextImpl(c, new TaskAttemptID()))
     r.initBatch(partSchema, PartValues.internalRow(partSchema, rawPartValues))
@@ -3088,7 +3088,7 @@ private[v2] object EqDeleteKeys {
       null, "CORRECTED", "UTC", "CORRECTED", "UTC",
       /* useOffHeap = */ false, /* capacity = */ 4096)
     val p = new Path(path)
-    val len = p.getFileSystem(c).getFileStatus(p).getLen
+    val len = IceFs.of(p, c).getFileStatus(p).getLen
     val split = new org.apache.hadoop.mapred.FileSplit(p, 0, len, Array.empty[String])
     r.initialize(split, new TaskAttemptContextImpl(c, new TaskAttemptID()))
     r.initBatch(new StructType(), PartValues.internalRow(new StructType(), Map.empty))

@@ -5,6 +5,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.io.OutputFile
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
 import org.apache.spark.sql.SparkSession
@@ -13,7 +14,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.icelite.{FileStat, FileStats, MetaIo, SnapshotMeta}
+import graft.icelite.{FileStat, FileStats, IceFs, MetaIo, SnapshotMeta}
 
 /** Distributed append for IceLite tables through the DSv2 write API
   * (`INSERT INTO <catalog>.<ns>.<tbl>`, `df.writeTo(...).append()`).
@@ -83,7 +84,7 @@ private[v2] class IceLiteWriteBuilder(
     // has no layout for — refuse HERE, naming the column, never per-task
     IceLiteWriteSchema.validate(info.schema(), s"write to $ns.$table")
     val dir = new Path(new Path(warehouse, ns), table)
-    val meta = MetaIo.read(fs = dir.getFileSystem(
+    val meta = MetaIo.read(fs = IceFs.of(dir,
       SparkSession.active.sparkContext.hadoopConfiguration), tableDir = dir)
     // the schema-race baseline is captured HERE, at write-build time: tasks
     // write data against this metadata's shape, so a DDL landing anywhere
@@ -363,7 +364,7 @@ private[v2] class IceLiteBatchWrite(
 
   private def tableDir = new Path(new Path(warehouse, ns), table)
   private def hadoopConf = SparkSession.active.sparkContext.hadoopConfiguration
-  private def fs = tableDir.getFileSystem(hadoopConf)
+  private def fs = IceFs.of(tableDir, hadoopConf)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     // verify the incoming schema against the table before any task runs:
@@ -591,7 +592,7 @@ private[v2] class IceLiteStreamingWrite(
 
   private def tableDir = new Path(new Path(warehouse, ns), table)
   private def hadoopConf = SparkSession.active.sparkContext.hadoopConfiguration
-  private def fs = tableDir.getFileSystem(hadoopConf)
+  private def fs = IceFs.of(tableDir, hadoopConf)
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo)
@@ -779,14 +780,17 @@ private[graft] object IceLiteRowWrite {
       partitionBy: Seq[String], ndvCols: String,
       bloomCols: String = "", bloomCapacity: Long = 50000L): Seq[FileStat] = {
     val spark = df.sparkSession
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    // broadcast, not captured: a captured conf is serialized by the closure
+    // cleaner, again into the task binary, and deserialized by every task
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     val schema = df.schema
-    df.queryExecution.toRdd.mapPartitions { rows =>
+    try df.queryExecution.toRdd.mapPartitions { rows =>
       if (rows.isEmpty) Iterator.empty
       else {
         val tc = org.apache.spark.TaskContext.get()
         val w = new IceLiteDataWriter(dataDir, schema, partitionBy,
-          tc.partitionId(), tc.taskAttemptId(), conf,
+          tc.partitionId(), tc.taskAttemptId(), conf.value,
           rowLevel = false, ndvCols = ndvCols,
           bloomCols = bloomCols, bloomCapacity = bloomCapacity)
         tc.addTaskFailureListener(new org.apache.spark.util.TaskFailureListener {
@@ -797,6 +801,7 @@ private[graft] object IceLiteRowWrite {
         Iterator.single(w.commit().asInstanceOf[IceLiteCommitMessage].stats)
       }
     }.collect().iterator.flatten.toSeq
+    finally conf.destroy()
   }
 }
 
@@ -938,7 +943,8 @@ private[v2] class IceLiteDataWriter(
     fileSeq += 1
     // `lead` is known here: writerFor is only reached from write(), which
     // resolves the row layout before asking for a writer
-    val w = new InternalRowWriterBuilder(new Path(file),
+    val w = new InternalRowWriterBuilder(
+      IceFs.outputFile(new Path(file), conf.value),
       new InternalRowWriteSupport(dataSchema, messageType, lead))
       .withConf(conf.value)
       .build()
@@ -1167,7 +1173,7 @@ private[v2] class IceLiteDataWriter(
     (done ++ openFiles).foreach { f =>
       try {
         val p = new Path(f)
-        val pfs = p.getFileSystem(conf.value)
+        val pfs = IceFs.of(p, conf.value)
         if (pfs.exists(p)) pfs.delete(p, false)
       } catch { case _: Exception => () }
     }
@@ -1287,10 +1293,12 @@ private[v2] class InternalRowWriteSupport(
 
 /** Minimal ParquetWriter builder carrying [[InternalRowWriteSupport]] (the
   * example-API `ExampleParquetWriter.builder` equivalent for InternalRow).
+  * Takes an `OutputFile` ([[IceFs.outputFile]]) so the file opens through
+  * IceLite's FileSystem, not one the builder resolves from a `Path`.
   */
 private[v2] class InternalRowWriterBuilder(
-    path: Path, support: WriteSupport[InternalRow])
-    extends ParquetWriter.Builder[InternalRow, InternalRowWriterBuilder](path) {
+    file: OutputFile, support: WriteSupport[InternalRow])
+    extends ParquetWriter.Builder[InternalRow, InternalRowWriterBuilder](file) {
   override def self(): InternalRowWriterBuilder = this
   override def getWriteSupport(conf: org.apache.hadoop.conf.Configuration)
       : WriteSupport[InternalRow] = support
@@ -1393,7 +1401,7 @@ private[v2] class IceLiteStagedTable(
 
   private def tableDir = new Path(new Path(warehouse, ns), tbl)
   private def hadoopConf = SparkSession.active.sparkContext.hadoopConfiguration
-  private def fs = tableDir.getFileSystem(hadoopConf)
+  private def fs = IceFs.of(tableDir, hadoopConf)
 
   override def name(): String = s"$ns.$tbl"
   override def schema(): StructType = schema0

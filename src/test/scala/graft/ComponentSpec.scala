@@ -51,6 +51,28 @@ class ComponentSpec extends SparkSpec {
     assert(back.count() == 25)
   }
 
+  test("extractor run pinned to an older snapshot_id reads that snapshot") {
+    val d = dataDir("ex-pinned")
+    val wh = scratch("component-ex-pinned-wh")
+    seedTable(wh)
+    val tbl = new IceCatalog(spark, wh).loadTable("lake", "nation_t")
+    tbl.append(tbl.toDF.limit(5))
+    val snaps = tbl.snapshots
+    assert(snaps.map(_.totalRows) == Seq(25L, 30L))
+    // a small id is what Jackson used to box as an Integer
+    writeConfig(d,
+      s"""{"action": "run", "parameters": {
+         |  "catalog": {"warehouse": "$wh"},
+         |  "source": {"namespace": "lake", "table_name": "nation_t"},
+         |  "data_selection": {"mode": "all_data", "snapshot_id": ${snaps.head.snapshotId}}
+         |}}""".stripMargin)
+    assert(ComponentMain.execute(spark, d) == 0)
+    val outDir = s"$d/out/tables/nation_t.csv"
+    val manifest = KeboolaManifest.fromJson(
+      Files.readString(Paths.get(s"$outDir.manifest")))
+    assert(KeboolaCsvBack(outDir, manifest).count() == 25)
+  }
+
   private def KeboolaCsvBack(dir: String, m: KeboolaManifest) =
     graft.sources.KeboolaCsv.read(spark, dir, m)
 
